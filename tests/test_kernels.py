@@ -560,7 +560,33 @@ def test_coarse_v0_cache_skips_oversized_entries():
         np.arange(n_low), np.repeat(np.arange(n_low), factor), factor, "sum"
     )
     kernels._COARSE_V0_CACHE.clear()
-    V0, logdet = kernels._coarse_v0(C, n, kernels.chow_lin_covariance)
+    key = (kernels.chow_lin_covariance, n, C.tobytes(), None)
+    V0, logdet = kernels._cached_v0(
+        kernels._COARSE_GRID, key, C, n, kernels.chow_lin_covariance
+    )
     assert V0.shape == (41, n_low, n_low)
     assert len(kernels._COARSE_V0_CACHE) == 0
     kernels._COARSE_V0_CACHE.clear()
+
+
+@pytest.mark.parametrize("method", ["chow-lin", "litterman"])
+def test_exact_fit_has_finite_output(method):
+    """A target that is exactly the yearly sum of its own first indicator
+    fits with zero residual, so the profiled scale sigma2 is ~0.  The
+    distribution step must still be finite and reproduce the target: GLS
+    beta and Sigma C' (C Sigma C')^{-1} do not depend on the scale of
+    Sigma, and building them from sigma2 * Sigma0 turned (C Sigma C')^{-1}
+    into 0/0 on about a quarter of such series."""
+    n_years = 8
+    labels = np.repeat(np.arange(n_years), 12)
+    C = kernels.conversion_matrix(np.arange(n_years), labels, 12, "sum")
+    for seed in range(40):
+        rng = np.random.default_rng(seed)
+        x1 = rng.uniform(100, 200, labels.size).round(2) * 1000
+        x2 = rng.uniform(1, 50, labels.size).round(0)
+        X = np.column_stack([x1, x2, np.ones(labels.size)])
+        y = C @ x1
+        y_hat, _res, info = kernels.solve_series(y, X, C, method)
+        assert np.isfinite(y_hat).all(), (method, seed)
+        assert_allclose(C @ y_hat, y, rtol=1e-8, err_msg=f"{method} seed {seed}")
+        assert np.isfinite(info["beta"]).all(), (method, seed)

@@ -540,6 +540,13 @@ def test_disagg_shared_aggregates_have_one_consumer(spark):
     # aggregation or a cached-subtree race
     assert plan.count("Scan parquet") == 7, plan
 
+    # the Denton queries evaluate eligibility as window flags over the
+    # kernel union too, instead of persisting each aggregate for a span
+    # join plus broadcast semi-joins
+    for name in ("disagg_denton_mean", "disagg_denton_companion"):
+        plan = _plan(Q.QUERIES[name](spark, SF))
+        assert "InMemoryRelation" not in plan, (name, plan)
+
     plan = _plan(Q.QUERIES["part_basket_lift"](spark, SF))
     assert "InMemoryRelation" not in plan, plan
     assert plan.count("Scan parquet") == 2, plan  # lineitem + part once
@@ -550,6 +557,11 @@ def test_disagg_kernel_width_is_pinned(spark):
     explicit repartition (exempt from AQE coalescing) feeds the window
     AND the grouped kernel — without it the byte-tiny window exchange
     coalesced to 2 tasks and serialized 1000 solves onto 2 cores."""
-    for name in ("disagg_chow_lin_suppliers", "disagg_litterman_nation"):
+    for name in (
+        "disagg_chow_lin_suppliers",
+        "disagg_litterman_nation",
+        "disagg_denton_mean",
+        "disagg_denton_companion",
+    ):
         plan = _plan(Q.QUERIES[name](spark, SF))
         assert "REPARTITION_BY_NUM" in plan, (name, plan)

@@ -387,15 +387,15 @@ def _litterman_V0_stack(grid: np.ndarray, n: int, C: np.ndarray) -> np.ndarray:
 litterman_covariance.batched_V0 = _litterman_V0_stack  # type: ignore[attr-defined]
 
 
-#: fixed coarse scan grid for the profile likelihood (fit_rho_sigma); being
+#: fixed coarse scan grid for the profile likelihood (_refine_rho); being
 #: a module constant is what makes the V0 cache below valid — the cached
-#: values are keyed on (builder, n, C) with the grid implicit
+#: values are keyed on (builder, n, C, bracket) with the grid implicit
 _COARSE_GRID = np.linspace(_RHO_LO, _RHO_HI, 41)
 _COARSE_GRID.setflags(write=False)
 
-#: coarse-pass V0 = C Sigma0(rho) C' stacks and their slogdets, keyed
-#: (builder name, n, C bytes).  At fleet width an applyInPandas worker
-#: solves hundreds of series that share the SAME period structure (same n,
+#: V0 = C Sigma0(rho) C' stacks and their slogdets for the coarse grid and
+#: the refinement brackets, keyed (builder, n, C bytes, bracket).  At fleet
+#: width an applyInPandas worker solves hundreds of series that share the SAME period structure (same n,
 #: same constraint matrix) — only y/X differ — so the rho-independent
 #: coarse-scan algebra is identical across them and was measured at ~20%
 #: of per-series CPU (chow-lin; more for litterman, whose V0 stack needs a
@@ -405,20 +405,17 @@ _COARSE_V0_CACHE: dict = {}
 _COARSE_V0_CACHE_MAX = 64  # coarse + refinement-bracket entries
 
 
-def _coarse_v0(
+def _cached_v0(
+    grid: np.ndarray,
+    key: tuple,
     C: np.ndarray,
     n: int,
     cov_builder: Callable[[float, float, int], np.ndarray],
 ) -> tuple[np.ndarray, np.ndarray]:
-    """(V0 stack, logdet stack) for the fixed coarse grid, cached."""
-    # key on the builder OBJECT (kept alive by the cache entry), not its
-    # name: two distinct builders can share a __name__ (lambdas), and an
-    # id() can be reused after GC — either would silently cross-wire
-    # covariance families
-    key = (cov_builder, n, C.tobytes())
+    """(V0 stack, logdet stack) for ``grid``, cached under ``key``."""
     hit = _COARSE_V0_CACHE.get(key)
     if hit is None:
-        V0 = _grid_v0(_COARSE_GRID, n, C, cov_builder)
+        V0 = _grid_v0(grid, n, C, cov_builder)
         _sign, logdet0 = np.linalg.slogdet(V0)
         # don't let one long-series fleet pin hundreds of MB per worker:
         # a (41, n_low, n_low) stack past a few MB (n_low ~ 180+) is cheap
@@ -430,38 +427,6 @@ def _coarse_v0(
         if len(_COARSE_V0_CACHE) >= _COARSE_V0_CACHE_MAX:
             _COARSE_V0_CACHE.pop(next(iter(_COARSE_V0_CACHE)))
         hit = _COARSE_V0_CACHE[key] = (V0, logdet0)
-    return hit
-
-
-def _bracket_v0(
-    C: np.ndarray,
-    n: int,
-    cov_builder: Callable[[float, float, int], np.ndarray],
-    best: int,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """(fine grid, V0 stack, logdet stack) for the refinement bracket
-    around coarse point ``best`` — cached like :func:`_coarse_v0`.
-
-    The fine grid is fully determined by the coarse argmin index (one of
-    41 possible brackets), and a fleet of same-structure series lands on a
-    handful of brackets, so the refinement pass caches as well as the
-    coarse one.  Grid values are bit-identical to the uncached
-    ``np.linspace(lo, hi, 33)``."""
-    lo = _COARSE_GRID[max(best - 1, 0)]
-    hi = _COARSE_GRID[min(best + 1, len(_COARSE_GRID) - 1)]
-    key = (cov_builder, n, C.tobytes(), int(best))
-    hit = _COARSE_V0_CACHE.get(key)
-    if hit is None:
-        fine = np.linspace(lo, hi, 33)
-        V0 = _grid_v0(fine, n, C, cov_builder)
-        _sign, logdet0 = np.linalg.slogdet(V0)
-        if V0.nbytes > (4 << 20):
-            return fine, V0, logdet0
-        for arr in (fine, V0, logdet0):
-            arr.setflags(write=False)
-        if len(_COARSE_V0_CACHE) >= _COARSE_V0_CACHE_MAX:
-            _COARSE_V0_CACHE.pop(next(iter(_COARSE_V0_CACHE)))
-        hit = _COARSE_V0_CACHE[key] = (fine, V0, logdet0)
     return hit
 
 
@@ -488,6 +453,7 @@ def _grid_v0(
 
 def _profile_grid_nll(
     grid: np.ndarray,
+    bracket: int | None,
     y: np.ndarray,
     X: np.ndarray,
     C: np.ndarray,
@@ -495,35 +461,26 @@ def _profile_grid_nll(
 ) -> np.ndarray:
     """Concentrated negative log-likelihood at every grid point via *stacked*
     linalg: the per-point algebra of :func:`profile_negative_loglik` is
-    expressed over a (G, n, n) covariance tensor so the whole scan costs a
+    expressed over a (G, n_low, n_low) tensor so the whole scan costs a
     handful of batched LAPACK calls instead of G sequential ones.  At fleet
     width (thousands of series inside ``applyInPandas`` groups) the grid scan
     dominated the solve; batching removes the per-call numpy overhead and is
     numerically the same computation.
+
+    The scan only needs V0 = C Sigma0 C' — builders may supply it directly
+    (litterman avoids G full inverses that way) — and V0 does not depend on
+    y or X, so it is cached per (builder, n, C, ``bracket``): ``None`` for
+    the coarse grid, the coarse argmin index for a refinement grid.
     """
     n = X.shape[0]
-    # the scan only ever needs V0 = C Sigma C' — builders may supply it
-    # directly (litterman avoids G full inverses that way); the coarse
-    # fixed-grid pass reuses the rho-independent (V0, logdet) across every
-    # series with the same period structure
-    if grid is _COARSE_GRID:
-        V0, logdet0 = _coarse_v0(np.ascontiguousarray(C), n, cov_builder)
-    else:
-        V0 = _grid_v0(grid, n, C, cov_builder)
-        _sign, logdet0 = np.linalg.slogdet(V0)
-    return _nll_from_v0(V0, logdet0, len(grid), y, X, C)
-
-
-def _nll_from_v0(
-    V0: np.ndarray,
-    logdet0: np.ndarray,
-    G: int,
-    y: np.ndarray,
-    X: np.ndarray,
-    C: np.ndarray,
-) -> np.ndarray:
-    """The per-series half of the grid scan: everything downstream of the
-    (rho-independent, cacheable) V0 stack."""
+    Cc = np.ascontiguousarray(C)
+    # key on the builder OBJECT (kept alive by the cache entry), not its
+    # name: two distinct builders can share a __name__ (lambdas), and an
+    # id() can be reused after GC — either would silently cross-wire
+    # covariance families
+    key = (cov_builder, n, Cc.tobytes(), bracket)
+    V0, logdet0 = _cached_v0(grid, key, Cc, n, cov_builder)
+    G = len(grid)
     n_low = y.shape[0]
     CX = C @ X                                  # (n_low, k)
     y2 = np.asarray(y, dtype=float).reshape(-1, 1)
@@ -583,9 +540,8 @@ def fit_rho_sigma(
 
     Default strategy differs from the reference (which runs a 2-D scipy
     solver from (0.8, 0.8)): sigma2 is concentrated out analytically, leaving
-    a 1-D profile likelihood in rho that a coarse grid scan + Brent refinement
-    solves to ~1e-10 — tighter than any of the reference's optimizer
-    configurations.
+    a 1-D profile likelihood in rho that :func:`_refine_rho` solves on a
+    two-level grid.
 
     ``optimizer_kwargs['method']`` is honored, not ignored: ``'nelder-mead'``
     runs a real bounded 2-D Nelder-Mead on the reference's objective from the
@@ -627,37 +583,10 @@ def fit_rho_sigma(
             "Brent-profile default."
         )
 
-    # Coarse global scan guards against non-convex profiles, then a second
-    # stacked scan inside the winning bracket plus one parabolic step.  Both
-    # levels run as single batched-LAPACK passes (_profile_grid_nll); the
-    # earlier Brent refinement converged to ~1e-10 but paid ~40 sequential
-    # dense solves per fit — at fleet width that was ~40% of kernel CPU for
-    # precision far below what the distribution step can observe (y_hat is
-    # stationary in rho at the optimum; goldens pass at rtol 1e-3 with the
-    # two-level grid's ~1e-6 rho accuracy).
-    grid = _COARSE_GRID
-    values = _profile_grid_nll(grid, y, X, C, cov_builder)
-    best = int(np.argmin(values))
-    fine, fine_V0, fine_logdet = _bracket_v0(
-        np.ascontiguousarray(C), X.shape[0], cov_builder, best
+    rho_star, (nll_star, s_star), nfev = _refine_rho(
+        lambda grid, bracket: _profile_grid_nll(grid, bracket, y, X, C, cov_builder),
+        lambda rho: profile_negative_loglik(rho, y, X, C, cov_builder),
     )
-    fvals = _nll_from_v0(fine_V0, fine_logdet, len(fine), y, X, C)
-    j = int(np.argmin(fvals))
-    rho_star = float(fine[j])
-    nfev = len(grid) + len(fine)
-    if 0 < j < len(fine) - 1:
-        f0, f1, f2 = fvals[j - 1], fvals[j], fvals[j + 1]
-        denom = f0 - 2.0 * f1 + f2
-        if denom > 0:  # proper local parabola: vertex for equispaced points
-            h = fine[1] - fine[0]
-            step = 0.5 * h * (f0 - f2) / denom
-            rho_star = float(np.clip(fine[j] + step, fine[j - 1], fine[j + 1]))
-    nll_star, s_star = profile_negative_loglik(rho_star, y, X, C, cov_builder)
-    nfev += 1
-    if nll_star > fvals[j]:  # parabola overshot a non-quadratic kink
-        rho_star = float(fine[j])
-        nll_star, s_star = profile_negative_loglik(rho_star, y, X, C, cov_builder)
-        nfev += 1
     sigma2 = s_star / (1.0 + rho_star)
     return FitResult(
         x=np.array([rho_star, sigma2]),
@@ -665,6 +594,50 @@ def fit_rho_sigma(
         nfev=nfev,
         extras={"scaled_sigma2": s_star},
     )
+
+
+def _refine_rho(
+    grid_nll: Callable[[np.ndarray, int | None], np.ndarray],
+    evaluate: Callable[[float], tuple],
+) -> tuple[float, tuple, int]:
+    """The profile-likelihood rho search shared by the dense and banded fits.
+
+    ``grid_nll(grid, bracket)`` returns the concentrated NLL at every point
+    of ``grid``; it is called on ``_COARSE_GRID`` (``bracket=None``), a
+    global scan that guards against non-convex profiles, then on a 33-point
+    grid across the coarse argmin's neighbours (``bracket`` = that index).
+    One parabolic step through the fine minimum follows, falling back to
+    that minimum if the step overshot a non-quadratic kink.
+    ``evaluate(rho)`` returns a tuple led by the NLL at ``rho``.  The
+    two-level grid reaches ~1e-6 in rho — y_hat is stationary in rho at the
+    optimum, and the earlier sequential Brent refinement cost ~40% of fleet
+    kernel CPU for precision nothing downstream observes.
+
+    Returns ``(rho_star, evaluate(rho_star), nfev)``.
+    """
+    best = int(np.argmin(grid_nll(_COARSE_GRID, None)))
+    fine = np.linspace(
+        _COARSE_GRID[max(best - 1, 0)],
+        _COARSE_GRID[min(best + 1, len(_COARSE_GRID) - 1)],
+        33,
+    )
+    fvals = grid_nll(fine, best)
+    j = int(np.argmin(fvals))
+    rho_star = float(fine[j])
+    if 0 < j < len(fine) - 1:
+        f0, f1, f2 = fvals[j - 1], fvals[j], fvals[j + 1]
+        denom = f0 - 2.0 * f1 + f2
+        if denom > 0:  # proper local parabola: vertex for equispaced points
+            h = fine[1] - fine[0]
+            step = 0.5 * h * (f0 - f2) / denom
+            rho_star = float(np.clip(fine[j] + step, fine[j - 1], fine[j + 1]))
+    out = evaluate(rho_star)
+    nfev = len(_COARSE_GRID) + len(fine) + 1
+    if out[0] > fvals[j]:  # parabola overshot a non-quadratic kink
+        rho_star = float(fine[j])
+        out = evaluate(rho_star)
+        nfev += 1
+    return rho_star, out, nfev
 
 
 def distribution_matrix(Sigma: np.ndarray, C: np.ndarray) -> np.ndarray:
@@ -1301,35 +1274,10 @@ def _gls_banded_fit(
     skel = _gls_kkt_indices(C, n=n, n_diags=n_diags)
     CX = _banded_CX(X, C, skel)
 
-    # identical two-level scan to fit_rho_sigma's default path
-    grid = np.linspace(_RHO_LO, _RHO_HI, 41)
-    values = _gls_profile_grid_banded(grid, y, CX, skel, reg_method)
-    best = int(np.argmin(values))
-    lo_g = grid[max(best - 1, 0)]
-    hi_g = grid[min(best + 1, len(grid) - 1)]
-    fine = np.linspace(lo_g, hi_g, 33)
-    fvals = _gls_profile_grid_banded(fine, y, CX, skel, reg_method)
-    j = int(np.argmin(fvals))
-    rho_star = float(fine[j])
-    nfev = len(grid) + len(fine)
-    if 0 < j < len(fine) - 1:
-        f0, f1, f2 = fvals[j - 1], fvals[j], fvals[j + 1]
-        denom = f0 - 2.0 * f1 + f2
-        if denom > 0:
-            h = fine[1] - fine[0]
-            step = 0.5 * h * (f0 - f2) / denom
-            rho_star = float(np.clip(fine[j] + step, fine[j - 1], fine[j + 1]))
-
-    nll_star, s_star, beta, y_hat = _gls_banded_eval(
-        rho_star, y, X, CX, skel, reg_method
+    rho_star, (nll_star, s_star, beta, y_hat), nfev = _refine_rho(
+        lambda grid, _bracket: _gls_profile_grid_banded(grid, y, CX, skel, reg_method),
+        lambda rho: _gls_banded_eval(rho, y, X, CX, skel, reg_method),
     )
-    nfev += 1
-    if nll_star > fvals[j]:  # parabola overshot a non-quadratic kink
-        rho_star = float(fine[j])
-        nll_star, s_star, beta, y_hat = _gls_banded_eval(
-            rho_star, y, X, CX, skel, reg_method
-        )
-        nfev += 1
     sigma2 = s_star / (1.0 + rho_star)
 
     # std errors through the banded precision: X' Sigma^{-1} X with
@@ -1457,16 +1405,19 @@ def solve_series(
         cov_builder = COVARIANCE_BUILDERS[method]
         result = fit_rho_sigma(y, X, C, cov_builder, optimizer_kwargs)
         rho, sigma2 = result.x
-        Sigma = cov_builder(rho, sigma2, n)
-        beta = gls_beta(Sigma, y, X, C)
+        # GLS beta and the distribution matrix do not depend on the scale of
+        # Sigma, so both use the unit-scale Sigma0: an exact fit profiles
+        # sigma2 to ~0, and (C sigma2 Sigma0 C')^{-1} would overflow to NaN
+        Sigma0 = cov_builder(rho, 1.0, n)
+        beta = gls_beta(Sigma0, y, X, C)
         info = {
             "beta": beta,
             "rho": rho,
             "sigma2": sigma2,
-            "std_beta": beta_std_errors(Sigma, X),
+            "std_beta": np.sqrt(sigma2) * beta_std_errors(Sigma0, X),
         }
         p = X @ beta
-        D = distribution_matrix(Sigma, C)
+        D = distribution_matrix(Sigma0, C)
 
     y_hat = p + D @ (y - C @ p)
     return y_hat, result, info

@@ -379,24 +379,7 @@ def disagg_fit_reports(spark, sf_dir):
     (ts_disagg.py:179-210)."""
     from tsdisagg_spark.spark.disagg import fit_reports
 
-    o = t(spark, sf_dir, "orders")
-    li = t(spark, sf_dir, "lineitem")
-    low = o.groupBy(
-        F.col("o_orderpriority").alias("series_id"),
-        F.date_trunc("year", "o_orderdate").cast("date").alias("ts"),
-    ).agg(F.sum("o_totalprice").alias("y"))
-    ind = (
-        li.join(
-            o.select("o_orderkey", "o_orderpriority"),
-            li["l_orderkey"] == F.col("o_orderkey"),
-        )
-        .groupBy(
-            F.col("o_orderpriority").alias("series_id"),
-            F.date_trunc("month", "l_shipdate").cast("date").alias("ts"),
-        )
-        .agg(F.sum("l_extendedprice").alias("x1"))
-        .withColumn("intercept", F.lit(1.0))
-    )
+    low, ind = _priority_inputs(spark, sf_dir)
     return fit_reports(low, ind, method="chow-lin", agg_func="sum")
 
 
@@ -423,24 +406,7 @@ def disagg_fit_report_checks(spark, sf_dir):
     against the R fixtures."""
     from tsdisagg_spark.spark.disagg import fit_reports
 
-    o = t(spark, sf_dir, "orders")
-    li = t(spark, sf_dir, "lineitem")
-    low = o.groupBy(
-        F.col("o_orderpriority").alias("series_id"),
-        F.date_trunc("year", "o_orderdate").cast("date").alias("ts"),
-    ).agg(F.sum("o_totalprice").alias("y"))
-    ind = (
-        li.join(
-            o.select("o_orderkey", "o_orderpriority"),
-            li["l_orderkey"] == F.col("o_orderkey"),
-        )
-        .groupBy(
-            F.col("o_orderpriority").alias("series_id"),
-            F.date_trunc("month", "l_shipdate").cast("date").alias("ts"),
-        )
-        .agg(F.sum("l_extendedprice").alias("x1"))
-        .withColumn("intercept", F.lit(1.0))
-    )
+    low, ind = _priority_inputs(spark, sf_dir)
     r = fit_reports(low, ind, method="chow-lin", agg_func="sum")
     return r.select(
         "series_id",
@@ -976,6 +942,95 @@ def customer_order_span(spark, sf_dir):
 # SQL-expressible disaggregation + the kernel-backed real thing
 # ---------------------------------------------------------------------------
 
+def _priority_inputs(spark, sf_dir) -> tuple[DataFrame, DataFrame]:
+    """Kernel inputs keyed by order priority: yearly order revenue as the
+    target ``(series_id, ts, y)`` and monthly shipped value plus an
+    intercept as the indicators ``(series_id, ts, x1, intercept)``."""
+    o = t(spark, sf_dir, "orders")
+    li = t(spark, sf_dir, "lineitem")
+    low = o.groupBy(
+        F.col("o_orderpriority").alias("series_id"),
+        F.date_trunc("year", "o_orderdate").alias("ts"),
+    ).agg(F.sum("o_totalprice").alias("y"))
+    ind = (
+        li.join(
+            o.select("o_orderkey", "o_orderpriority"),
+            li["l_orderkey"] == F.col("o_orderkey"),
+        )
+        .groupBy(
+            F.col("o_orderpriority").alias("series_id"),
+            F.date_trunc("month", "l_shipdate").alias("ts"),
+        )
+        .agg(F.sum("l_extendedprice").alias("x1"))
+        .withColumn("intercept", F.lit(1.0))
+    )
+    return low, ind
+
+
+def _reaggregate(
+    out: DataFrame,
+    unit: str = "year",
+    agg: Callable = F.sum,
+    alias: str = "y",
+    n_sub: int | None = 12,
+) -> DataFrame:
+    """Re-aggregate kernel output ``y_hat`` to its low periods (``unit``),
+    rounded to cents, so ``C @ y_hat = y`` is checkable against an oracle.
+    With ``n_sub`` only periods holding that many sub-periods are kept (the
+    oracles' complete-year rule); ``None`` keeps every period."""
+    keyed = out.groupBy("series_id", F.date_trunc(unit, "ts").alias("ts"))
+    value = F.round(agg("y_hat"), 2).alias(alias)
+    if n_sub is None:
+        return keyed.agg(value)
+    return (
+        keyed.agg(value, F.count(F.lit(1)).alias("n_sub"))
+        .filter(F.col("n_sub") == n_sub)
+        .drop("n_sub")
+    )
+
+
+def _eligible_series(
+    unioned: DataFrame, *, low_months: int, min_low: int, indicators: bool = True
+) -> DataFrame:
+    """Pin the kernel width of a tagged union (``spark.disagg._tagged_union``
+    shape) and keep the series the kernel accepts, so the oracle and the
+    kernel agree on which series solve: gap-free target periods
+    (``low_months`` apart), at least ``min_low`` of them, and with
+    ``indicators`` gap-free monthly indicators starting no later than the
+    target (ts_disagg.py:233-240 raises otherwise).
+
+    The rules are window flags evaluated after the union, so each source
+    aggregate has one consumer and nothing is persisted (a span aggregate
+    joined back made cached aggregates race under AQE and compute their
+    join subtrees twice).  The pin comes first: the byte-tiny window
+    exchange keeps cluster width and the kernel reuses it — pass
+    ``pre_partitioned=True`` (unpinned, AQE coalesced it to 2 tasks)."""
+    from tsdisagg_spark.operators._par import pin_compute_parallelism
+    from tsdisagg_spark.spark.disagg import _SRC_IND, _TAG
+
+    w = Window.partitionBy("series_id")
+
+    def span(rows):
+        first = F.min(F.when(rows, F.col("ts"))).over(w)
+        last = F.max(F.when(rows, F.col("ts"))).over(w)
+        return first, last, F.count(F.when(rows, F.lit(1))).over(w)
+
+    is_ind = F.col(_TAG) == _SRC_IND
+    lo, last_lo, n_lo = span(~is_ind)
+    ok = (n_lo == (F.months_between(last_lo, lo) / low_months).cast("long") + 1) & (
+        n_lo >= min_low
+    )
+    if indicators:
+        hi, last_hi, n_hi = span(is_ind)
+        ok = ok & (hi <= lo) & (n_hi == F.months_between(last_hi, hi).cast("long") + 1)
+    return (
+        pin_compute_parallelism(unioned, "series_id")
+        .withColumn("__ok", ok)
+        .filter("__ok")
+        .drop("__ok")
+    )
+
+
 @query(
     "prorata_disagg",
     oracle="""
@@ -1056,24 +1111,7 @@ def disagg_chow_lin_priority(spark, sf_dir):
     constraint on identical data."""
     from tsdisagg_spark.spark.disagg import disaggregate
 
-    o = t(spark, sf_dir, "orders")
-    li = t(spark, sf_dir, "lineitem")
-    low = o.groupBy(
-        F.col("o_orderpriority").alias("series_id"),
-        F.date_trunc("year", "o_orderdate").alias("ts"),
-    ).agg(F.sum("o_totalprice").alias("y"))
-    ind = (
-        li.join(
-            o.select("o_orderkey", "o_orderpriority"),
-            li["l_orderkey"] == F.col("o_orderkey"),
-        )
-        .groupBy(
-            F.col("o_orderpriority").alias("series_id"),
-            F.date_trunc("month", "l_shipdate").alias("ts"),
-        )
-        .agg(F.sum("l_extendedprice").alias("x1"))
-        .withColumn("intercept", F.lit(1.0))
-    )
+    low, ind = _priority_inputs(spark, sf_dir)
     out = disaggregate(low, ind, method="chow-lin", agg_func="last")
     # single pass over the kernel output: a windowed max/count avoids the
     # self-join that would re-run the grouped GLS a second time, and the
@@ -1167,39 +1205,7 @@ def disagg_chow_lin_suppliers(spark, sf_dir):
         F.sum("x1").alias("x1"),
         F.grouping("ts").alias("is_low"),
     )
-    # pin the per-series width BEFORE the window: the explicit repartition
-    # is exempt from AQE coalescing and its hash(series_id) partitioning is
-    # reused by the window AND the kernel stage downstream (pre_partitioned
-    # below) — without it AQE coalesced the byte-tiny window exchange to 2
-    # tasks and the CPU-dense GLS kernel stage rode it, serializing 1000
-    # solves onto 2 cores
-    from tsdisagg_spark.operators._par import pin_compute_parallelism
-
-    gs = pin_compute_parallelism(gs, "series_id")
-    # eligibility as window flags over the tiny per-series row set (month
-    # rows carry is_low=0, year rows is_low=1) — no second consumer, no
-    # broadcast join: n_years is the count of year-level rows (one per
-    # distinct year by construction)
-    w = Window.partitionBy("series_id")
     is_month = F.col("is_low") == 0
-    gs = (
-        gs.withColumn(
-            "first_m", F.min(F.when(is_month, F.col("ts"))).over(w)
-        )
-        .withColumn("last_m", F.max(F.when(is_month, F.col("ts"))).over(w))
-        .withColumn(
-            "n_months", F.count(F.when(is_month, F.lit(1))).over(w)
-        )
-        .withColumn(
-            "n_years", F.count(F.when(~is_month, F.lit(1))).over(w)
-        )
-        .filter(
-            (F.month("first_m") == 1)
-            & (F.col("n_months")
-               == F.months_between("last_m", "first_m").cast("long") + 1)
-            & (F.col("n_years") >= 3)
-        )
-    )
     unioned = gs.select(
         "series_id",
         F.when(is_month, F.col("ts")).otherwise(F.col("yts")).alias("ts"),
@@ -1208,29 +1214,21 @@ def disagg_chow_lin_suppliers(spark, sf_dir):
         F.when(is_month, F.lit(1.0)).cast("double").alias("intercept"),
         F.when(is_month, F.lit(_SRC_IND)).otherwise(F.lit(_SRC_LOW)).alias(_TAG),
     )
+    # the target years come from the same months, so they are gap-free
+    # whenever the months are, and "no later than the target" means the
+    # first month is a January
     out = _disaggregate_unioned(
-        unioned,
+        _eligible_series(unioned, low_months=12, min_low=3),
         ["x1", "intercept"],
         method="chow-lin",
         agg_func="sum",
         errors="skip",
-        # the pinned hash(series_id) width above survives the window and
-        # the narrow projections — the kernel reuses it, zero extra
-        # exchange
         pre_partitioned=True,
     )
-    # one aggregation pass over the kernel output; no semi-join back to `low`
-    # (it would re-scan lineitem — every 12-month year group is a low year
-    # by construction, since low is derived from the same monthly frame)
-    return (
-        out.groupBy("series_id", F.date_trunc("year", "ts").alias("ts"))
-        .agg(
-            F.round(F.sum("y_hat"), 2).alias("y"),
-            F.count(F.lit(1)).alias("n_months"),
-        )
-        .filter(F.col("n_months") == 12)
-        .drop("n_months")
-    )
+    # no semi-join back to `low` (it would re-scan lineitem — every
+    # 12-month year group is a low year by construction, since low is
+    # derived from the same monthly frame)
+    return _reaggregate(out)
 
 
 @query(
@@ -1263,34 +1261,10 @@ def disagg_reagg_check(spark, sf_dir):
     breaks the constraint shows up as a value-hash mismatch."""
     from tsdisagg_spark.spark.disagg import disaggregate
 
-    o = t(spark, sf_dir, "orders")
-    li = t(spark, sf_dir, "lineitem")
-    low = o.groupBy(
-        F.col("o_orderpriority").alias("series_id"),
-        F.date_trunc("year", "o_orderdate").alias("ts"),
-    ).agg(F.sum("o_totalprice").alias("y"))
-    ind = (
-        li.join(
-            o.select("o_orderkey", "o_orderpriority"),
-            li["l_orderkey"] == F.col("o_orderkey"),
-        )
-        .groupBy(
-            F.col("o_orderpriority").alias("series_id"),
-            F.date_trunc("month", "l_shipdate").alias("ts"),
-        )
-        .agg(F.sum("l_extendedprice").alias("x1"))
-        .withColumn("intercept", F.lit(1.0))
-    )
+    low, ind = _priority_inputs(spark, sf_dir)
     out = disaggregate(low, ind, method="chow-lin", agg_func="sum")
-    return (
-        out.groupBy("series_id", F.date_trunc("year", "ts").alias("ts"))
-        .agg(
-            F.round(F.sum("y_hat"), 2).alias("y"),
-            F.count(F.lit(1)).alias("n_months"),
-        )
-        .filter(F.col("n_months") == 12)
-        .drop("n_months")
-        .join(low.select("series_id", "ts"), ["series_id", "ts"], "left_semi")
+    return _reaggregate(out).join(
+        low.select("series_id", "ts"), ["series_id", "ts"], "left_semi"
     )
 
 
@@ -1341,15 +1315,7 @@ def disagg_two_indicators(spark, sf_dir):
     out = disaggregate(
         low, ind, method="chow-lin", agg_func="sum", errors="skip"
     )
-    return (
-        out.groupBy("series_id", F.date_trunc("year", "ts").alias("ts"))
-        .agg(
-            F.round(F.sum("y_hat"), 2).alias("y"),
-            F.count(F.lit(1)).alias("n_months"),
-        )
-        .filter(F.col("n_months") == 12)
-        .drop("n_months")
-    )
+    return _reaggregate(out)
 
 
 @query(
@@ -1398,9 +1364,7 @@ def disagg_litterman_nation(spark, sf_dir):
     Eligibility mirrors the engine's input contract in SQL: indicator must
     start no later than the low series (ts_disagg.py:233-240 raises
     otherwise), be gap-free, and span >= 3 low periods."""
-    from tsdisagg_spark.operators._par import pin_compute_parallelism
-    from tsdisagg_spark.spark.disagg import _SRC_IND, _SRC_LOW, _TAG
-    from tsdisagg_spark.spark.disagg import _disaggregate_unioned
+    from tsdisagg_spark.spark.disagg import _disaggregate_unioned, _tagged_union
 
     o = t(spark, sf_dir, "orders")
     c = t(spark, sf_dir, "customer")
@@ -1411,15 +1375,6 @@ def disagg_litterman_nation(spark, sf_dir):
         .join(n, c["c_nationkey"] == n["n_nationkey"])
         .select("o_orderkey", "o_orderdate", "o_totalprice", "n_name")
     )
-    # Each source aggregate is built ONCE and goes straight into the
-    # tagged kernel union; eligibility is evaluated AFTER the union with
-    # window flags over the tiny per-series row set.  The previous shape
-    # (persist each aggregate, span-agg both, join spans, broadcast the
-    # eligible set back into both legs) gave every cached aggregate two
-    # consumers whose leading query stages raced under AQE and computed
-    # the orders x customer and lineitem join subtrees twice each
-    # (stage-profiled: three near-duplicate stage pairs, ~126s task time
-    # loaded; the ind subtree ran twice in round 13's quiet profile).
     low = ordn.groupBy(
         F.col("n_name").alias("series_id"),
         F.date_trunc("year", "o_orderdate").alias("ts"),
@@ -1434,64 +1389,18 @@ def disagg_litterman_nation(spark, sf_dir):
             F.date_trunc("month", "l_shipdate").alias("ts"),
         )
         .agg(F.sum("l_extendedprice").alias("x1"))
+        .withColumn("intercept", F.lit(1.0))
     )
-    unioned = low.select(
-        "series_id",
-        F.col("ts").cast("timestamp").alias("ts"),
-        F.col("y").cast("double").alias("y"),
-        F.lit(None).cast("double").alias("x1"),
-        F.lit(None).cast("double").alias("intercept"),
-        F.lit(_SRC_LOW).alias(_TAG),
-    ).unionByName(
-        ind.select(
-            "series_id",
-            F.col("ts").cast("timestamp").alias("ts"),
-            F.lit(None).cast("double").alias("y"),
-            F.col("x1").cast("double").alias("x1"),
-            F.lit(1.0).alias("intercept"),
-            F.lit(_SRC_IND).alias(_TAG),
-        )
-    )
-    # pin the per-series width before the window so the byte-tiny exchange
-    # keeps cluster parallelism and the kernel stage reuses it (same fix
-    # as disagg_chow_lin_suppliers)
-    unioned = pin_compute_parallelism(unioned, "series_id")
-    w = Window.partitionBy("series_id")
-    is_ind = F.col(_TAG) == _SRC_IND
-    unioned = (
-        unioned.withColumn("hi", F.min(F.when(is_ind, F.col("ts"))).over(w))
-        .withColumn("last_m", F.max(F.when(is_ind, F.col("ts"))).over(w))
-        .withColumn("n_months", F.count(F.when(is_ind, F.lit(1))).over(w))
-        .withColumn("lo", F.min(F.when(~is_ind, F.col("ts"))).over(w))
-        .withColumn("last_y", F.max(F.when(~is_ind, F.col("ts"))).over(w))
-        .withColumn("n_years", F.count(F.when(~is_ind, F.lit(1))).over(w))
-        .filter(
-            (F.col("hi") <= F.col("lo"))
-            & (F.col("n_months")
-               == F.months_between("last_m", "hi").cast("long") + 1)
-            & (F.col("n_years")
-               == (F.months_between("last_y", "lo") / 12).cast("long") + 1)
-            & (F.col("n_years") >= 3)
-        )
-        .select("series_id", "ts", "y", "x1", "intercept", _TAG)
-    )
+    unioned, ind_cols = _tagged_union(low, ind, "series_id", "ts", "y")
     out = _disaggregate_unioned(
-        unioned,
-        ["x1", "intercept"],
+        _eligible_series(unioned, low_months=12, min_low=3),
+        ind_cols,
         method="litterman",
         agg_func="sum",
         errors="skip",
         pre_partitioned=True,
     )
-    return (
-        out.groupBy("series_id", F.date_trunc("year", "ts").alias("ts"))
-        .agg(
-            F.round(F.sum("y_hat"), 2).alias("y"),
-            F.count(F.lit(1)).alias("n_months"),
-        )
-        .filter(F.col("n_months") == 12)
-        .drop("n_months")
-    )
+    return _reaggregate(out)
 
 
 @query(
@@ -1538,7 +1447,7 @@ def disagg_denton_mean(spark, sf_dir):
     value, then re-AVERAGED over complete years — with C rows of 1/k, the
     monthly y_hat must average back to the yearly mean exactly
     (conversion_matrix 'mean' rows; ts_disagg.py agg_func='mean')."""
-    from tsdisagg_spark.spark.disagg import disaggregate
+    from tsdisagg_spark.spark.disagg import _disaggregate_unioned, _tagged_union
 
     o = t(spark, sf_dir, "orders")
     c = t(spark, sf_dir, "customer")
@@ -1548,50 +1457,21 @@ def disagg_denton_mean(spark, sf_dir):
     low = seg.groupBy(
         F.col("c_mktsegment").alias("series_id"),
         F.date_trunc("year", "o_orderdate").alias("ts"),
-    ).agg(F.avg("o_totalprice").alias("y")).persist()
+    ).agg(F.avg("o_totalprice").alias("y"))
     ind = seg.groupBy(
         F.col("c_mktsegment").alias("series_id"),
         F.date_trunc("month", "o_orderdate").alias("ts"),
-    ).agg(F.avg("o_totalprice").alias("x1")).persist()
-    # eligibility mirrors the engine's input contract (a month gap makes the
-    # indicator's frequency uninferable and errors='skip' drops the series;
-    # the oracle must agree on which series solve)
-    ind_span = ind.groupBy("series_id").agg(
-        F.min("ts").alias("hi"),
-        F.max("ts").alias("last_m"),
-        F.count(F.lit(1)).alias("n_months"),
+    ).agg(F.avg("o_totalprice").alias("x1"))
+    unioned, ind_cols = _tagged_union(low, ind, "series_id", "ts", "y")
+    out = _disaggregate_unioned(
+        _eligible_series(unioned, low_months=12, min_low=2),
+        ind_cols,
+        method="denton-cholette",
+        agg_func="mean",
+        errors="skip",
+        pre_partitioned=True,
     )
-    low_span = low.groupBy("series_id").agg(
-        F.min("ts").alias("lo"),
-        F.max("ts").alias("last_y"),
-        F.count(F.lit(1)).alias("n_years"),
-    )
-    elig = (
-        ind_span.join(low_span, "series_id")
-        .filter(
-            (F.col("hi") <= F.col("lo"))
-            & (F.col("n_months")
-               == F.months_between("last_m", "hi").cast("long") + 1)
-            & (F.col("n_years")
-               == (F.months_between("last_y", "lo") / 12).cast("long") + 1)
-            & (F.col("n_years") >= 2)
-        )
-        .select("series_id")
-    )
-    low = low.join(F.broadcast(elig), "series_id", "left_semi")
-    ind = ind.join(F.broadcast(elig), "series_id", "left_semi")
-    out = disaggregate(
-        low, ind, method="denton-cholette", agg_func="mean", errors="skip"
-    )
-    return (
-        out.groupBy("series_id", F.date_trunc("year", "ts").alias("ts"))
-        .agg(
-            F.round(F.avg("y_hat"), 2).alias("y_mean"),
-            F.count(F.lit(1)).alias("n_months"),
-        )
-        .filter(F.col("n_months") == 12)
-        .drop("n_months")
-    )
+    return _reaggregate(out, agg=F.avg, alias="y_mean")
 
 
 @query(
@@ -1617,7 +1497,7 @@ def disagg_denton_companion(spark, sf_dir):
     companion timeline covers every low quarter with exactly 3 months, so
     the re-aggregation must reproduce ALL quarterly values (no completeness
     filter needed, which itself checks the synthesized timeline's shape)."""
-    from tsdisagg_spark.spark.disagg import disaggregate
+    from tsdisagg_spark.spark.disagg import _disaggregate_unioned, _tagged_union
 
     o = t(spark, sf_dir, "orders")
     c = t(spark, sf_dir, "customer")
@@ -1629,31 +1509,18 @@ def disagg_denton_companion(spark, sf_dir):
             F.date_trunc("quarter", "o_orderdate").alias("ts"),
         )
         .agg(F.sum("o_totalprice").alias("y"))
-        .persist()
     )
-    # a quarter gap makes the low index's frequency uninferable, so
-    # errors='skip' would drop the series — the oracle applies the same rule
-    elig = (
-        low.groupBy("series_id")
-        .agg(
-            F.min("ts").alias("lo"),
-            F.max("ts").alias("hi"),
-            F.count(F.lit(1)).alias("nq"),
-        )
-        .filter(
-            (F.col("nq") == (F.months_between("hi", "lo") / 3).cast("long") + 1)
-            & (F.col("nq") >= 2)
-        )
-        .select("series_id")
+    unioned, _ = _tagged_union(low, None, "series_id", "ts", "y")
+    out = _disaggregate_unioned(
+        _eligible_series(unioned, low_months=3, min_low=2, indicators=False),
+        [],
+        method="denton",
+        agg_func="sum",
+        target_freq="MS",
+        errors="skip",
+        pre_partitioned=True,
     )
-    low = low.join(F.broadcast(elig), "series_id", "left_semi")
-    out = disaggregate(
-        low, method="denton", agg_func="sum", target_freq="MS", errors="skip"
-    )
-    return (
-        out.groupBy("series_id", F.date_trunc("quarter", "ts").alias("ts"))
-        .agg(F.round(F.sum("y_hat"), 2).alias("y"))
-    )
+    return _reaggregate(out, unit="quarter", n_sub=None)
 
 
 # ---------------------------------------------------------------------------

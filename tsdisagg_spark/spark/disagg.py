@@ -25,9 +25,8 @@ length, so very long series belong on the banded-kernel path anyway).
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -130,9 +129,11 @@ def disaggregate(
         required unless each series' frequency can be stepped down
         automatically.
     errors : ``'raise'`` | ``'skip'``
-        ``'skip'`` drops series whose solve fails (logged into the plan as an
-        empty group) instead of failing the job — at millions of series one
-        malformed group should not kill a 1000-executor stage.
+        ``'raise'`` fails the job with an error naming a series whose
+        solve failed.  ``'skip'`` drops failed series from the output
+        (they emit no rows and nothing records why) instead of failing the
+        job — at millions of series one malformed group should not kill a
+        1000-executor stage.
     num_partitions : int, optional
         Partition count for the kernel stage; defaults to one partition per
         core (see :func:`_partition_for_kernel`).
@@ -149,8 +150,6 @@ def disaggregate(
     -------
     DataFrame ``(series_col, ts_col, y_hat)`` on the high-frequency axis.
     """
-    if errors not in ("raise", "skip"):
-        raise ValueError("errors must be 'raise' or 'skip'")
     if pre_partitioned and indicators is not None:
         # the internal union with the indicator frame discards any input
         # partitioning, so honoring the flag here would hand AQE a byte-tiny
@@ -182,23 +181,9 @@ def disaggregate(
 
 
 def _disaggregate_unioned(
-    unioned: DataFrame,
-    ind_cols: list[str],
-    *,
-    method: str,
-    agg_func: str,
-    criterion: str = "proportional",
-    h: int = 1,
-    target_freq: str | None = None,
-    optimizer_kwargs: dict | None = None,
-    series_col: str = "series_id",
-    ts_col: str = "ts",
-    value_col: str = "y",
-    errors: str = "raise",
-    num_partitions: int | None = None,
-    pre_partitioned: bool = False,
+    unioned: DataFrame, ind_cols: list[str], *, ts_col: str = "ts", **kwargs
 ) -> DataFrame:
-    """Kernel stage over an ALREADY-TAGGED union frame.
+    """``y_hat`` rows from the kernel stage over an ALREADY-TAGGED union.
 
     ``unioned`` must match :func:`_tagged_union`'s output shape exactly:
     ``(series_col, ts_col TIMESTAMP, value_col DOUBLE, *ind_cols DOUBLE,
@@ -210,78 +195,100 @@ def _disaggregate_unioned(
     the separate low/indicator legs of the internal union otherwise race
     to materialize a cold cached upstream and compute it once per leg
     (measured: the lineitem month aggregation ran 2-4x per action in
-    disagg_chow_lin_suppliers before the round-14 restructure)."""
+    disagg_chow_lin_suppliers before the round-14 restructure).
+    ``kwargs`` are :func:`disaggregate`'s keyword arguments."""
+
+    def y_hat_rows(arts: dict) -> pd.DataFrame:
+        out = arts["output"]
+        return pd.DataFrame({ts_col: out.index, "y_hat": out.to_numpy(dtype=float)})
+
+    return _kernel_stage(
+        unioned,
+        ind_cols,
+        [T.StructField(ts_col, T.TimestampType()), T.StructField("y_hat", T.DoubleType())],
+        y_hat_rows,
+        ts_col=ts_col,
+        compute_report=False,
+        **kwargs,
+    )
+
+
+def _series_frames(
+    pdf: pd.DataFrame, ind_cols: list[str], ts_col: str, value_col: str
+) -> tuple[pd.DataFrame, pd.DataFrame | None]:
+    """Split one series' tagged rows into the ``(low_df, high_df)`` pair the
+    single-series API takes.  Indicator columns that are all-null for this
+    series are dropped, so mixed fleets (some series with k=1, some k=2)
+    share one input; a series left with no indicator gets ``None``."""
+    low_rows = (
+        pdf[pdf[_TAG] == _SRC_LOW].sort_values(ts_col).dropna(subset=[value_col])
+    )
+    low_df = pd.DataFrame(
+        {value_col: low_rows[value_col].to_numpy()},
+        index=pd.DatetimeIndex(low_rows[ts_col]),
+    )
+    if not ind_cols:
+        return low_df, None
+    ind_rows = pdf[pdf[_TAG] == _SRC_IND].sort_values(ts_col)
+    high_df = pd.DataFrame(
+        {c: ind_rows[c].to_numpy() for c in ind_cols},
+        index=pd.DatetimeIndex(ind_rows[ts_col]),
+    ).dropna(axis=1, how="all")
+    return low_df, (high_df if high_df.shape[1] else None)
+
+
+def _kernel_stage(
+    unioned: DataFrame,
+    ind_cols: list[str],
+    out_fields: list[T.StructField],
+    emit: Callable[[dict], pd.DataFrame | None],
+    *,
+    series_col: str = "series_id",
+    ts_col: str = "ts",
+    value_col: str = "y",
+    errors: str = "raise",
+    num_partitions: int | None = None,
+    pre_partitioned: bool = False,
+    **full_kwargs,
+) -> DataFrame:
+    """The one grouped kernel stage behind every entry point of this module.
+
+    Partitions ``unioned`` for the kernel (unless ``pre_partitioned``), then
+    per series: splits the tagged rows (:func:`_series_frames`), runs
+    :func:`~tsdisagg_spark.disagg.disaggregate_full` with ``full_kwargs``,
+    and turns its artifacts into rows with ``emit`` (``None`` = no rows).
+    The output schema is ``series_col`` followed by ``out_fields``.  A
+    failing series raises an error naming it, or under ``errors='skip'``
+    emits no rows."""
     if errors not in ("raise", "skip"):
         raise ValueError("errors must be 'raise' or 'skip'")
-
-    series_field = unioned.schema[series_col]
-    out_schema = T.StructType(
-        [
-            T.StructField(series_col, series_field.dataType),
-            T.StructField(ts_col, T.TimestampType()),
-            T.StructField("y_hat", T.DoubleType()),
-        ]
+    schema = T.StructType(
+        [T.StructField(series_col, unioned.schema[series_col].dataType), *out_fields]
     )
 
     def solve_group(pdf: pd.DataFrame) -> pd.DataFrame:
         sid = pdf[series_col].iloc[0]
         try:
-            low_rows = (
-                pdf[pdf[_TAG] == _SRC_LOW]
-                .sort_values(ts_col)
-                .dropna(subset=[value_col])
-            )
-            low_df = pd.DataFrame(
-                {value_col: low_rows[value_col].to_numpy()},
-                index=pd.DatetimeIndex(low_rows[ts_col]),
-            )
-            high_df = None
-            if ind_cols:
-                ind_rows = pdf[pdf[_TAG] == _SRC_IND].sort_values(ts_col)
-                # per-series indicator matrix; drop all-null columns so mixed
-                # fleets (some series with k=1, some k=2) can share one input
-                high_df = pd.DataFrame(
-                    {c: ind_rows[c].to_numpy() for c in ind_cols},
-                    index=pd.DatetimeIndex(ind_rows[ts_col]),
-                ).dropna(axis=1, how="all")
-                if high_df.shape[1] == 0:
-                    high_df = None
-            arts = disaggregate_full(
-                low_df,
-                high_df,
-                target_freq=target_freq,
-                agg_func=agg_func,
-                method=method,
-                criterion=criterion,
-                h=h,
-                optimizer_kwargs=optimizer_kwargs,
-                verbose=False,
-                compute_report=False,
-            )
-            out = arts["output"]
-            return pd.DataFrame(
-                {
-                    series_col: sid,
-                    ts_col: out.index,
-                    "y_hat": out.to_numpy(dtype=float),
-                }
-            )
+            low_df, high_df = _series_frames(pdf, ind_cols, ts_col, value_col)
+            rows = emit(disaggregate_full(low_df, high_df, verbose=False, **full_kwargs))
         except Exception as exc:  # noqa: BLE001 — per-series isolation
             if errors == "skip":
-                return pd.DataFrame(
-                    {series_col: [], ts_col: [], "y_hat": []}
-                ).astype({ts_col: "datetime64[ns]", "y_hat": "float64"})
+                return pd.DataFrame(columns=schema.fieldNames())
             raise RuntimeError(f"disaggregation failed for series {sid!r}: {exc}") from exc
+        if rows is None:
+            return pd.DataFrame(columns=schema.fieldNames())
+        rows.insert(0, series_col, sid)
+        return rows
 
     partitioned = (
         unioned
         if pre_partitioned
         else _partition_for_kernel(unioned, series_col, num_partitions)
     )
-    return partitioned.groupBy(series_col).applyInPandas(solve_group, schema=out_schema)
+    return partitioned.groupBy(series_col).applyInPandas(solve_group, schema=schema)
 
 
-_REPORT_SCHEMA_TAIL = [
+_REPORT_FIELDS = [
     T.StructField("variable", T.StringType()),
     T.StructField("coef", T.DoubleType()),
     T.StructField("sd_err", T.DoubleType()),
@@ -292,6 +299,12 @@ _REPORT_SCHEMA_TAIL = [
     T.StructField("rho", T.DoubleType()),
     T.StructField("sigma2", T.DoubleType()),
 ]
+
+
+def _report_rows(arts: dict) -> pd.DataFrame | None:
+    if arts["report"] is None:  # Denton-family fits have no regression
+        return None
+    return arts["report"].assign(rho=arts["info"]["rho"], sigma2=arts["info"]["sigma2"])
 
 
 def fit_reports(
@@ -309,39 +322,19 @@ def fit_reports(
     """Per-series GLS regression diagnostics as a DataFrame
     ``(series, variable, coef, sd_err, t, p_value, ci_low, ci_high, rho,
     sigma2)`` — the engine's replacement for the reference's stdout report
-    (ts_disagg.py:179-210), queryable instead of printed."""
+    (ts_disagg.py:179-210), queryable instead of printed.  A series whose
+    fit fails raises an error naming it, as :func:`disaggregate` does."""
     unioned, ind_cols = _tagged_union(low, indicators, series_col, ts_col, value_col)
-    series_field = low.schema[series_col]
-    schema = T.StructType(
-        [T.StructField(series_col, series_field.dataType), *_REPORT_SCHEMA_TAIL]
+    return _kernel_stage(
+        unioned,
+        ind_cols,
+        _REPORT_FIELDS,
+        _report_rows,
+        series_col=series_col,
+        ts_col=ts_col,
+        value_col=value_col,
+        num_partitions=num_partitions,
+        method=method,
+        agg_func=agg_func,
+        optimizer_kwargs=optimizer_kwargs,
     )
-
-    def report_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        sid = pdf[series_col].iloc[0]
-        low_rows = (
-            pdf[pdf[_TAG] == _SRC_LOW].sort_values(ts_col).dropna(subset=[value_col])
-        )
-        ind_rows = pdf[pdf[_TAG] == _SRC_IND].sort_values(ts_col)
-        low_df = pd.DataFrame(
-            {value_col: low_rows[value_col].to_numpy()},
-            index=pd.DatetimeIndex(low_rows[ts_col]),
-        )
-        high_df = pd.DataFrame(
-            {c: ind_rows[c].to_numpy() for c in ind_cols},
-            index=pd.DatetimeIndex(ind_rows[ts_col]),
-        ).dropna(axis=1, how="all")
-        arts = disaggregate_full(
-            low_df, high_df, agg_func=agg_func, method=method,
-            optimizer_kwargs=optimizer_kwargs, verbose=False,
-        )
-        report = arts["report"]
-        if report is None:
-            return pd.DataFrame(columns=[series_col] + [f.name for f in _REPORT_SCHEMA_TAIL])
-        report = report.copy()
-        report.insert(0, series_col, sid)
-        report["rho"] = arts["info"]["rho"]
-        report["sigma2"] = arts["info"]["sigma2"]
-        return report
-
-    partitioned = _partition_for_kernel(unioned, series_col, num_partitions)
-    return partitioned.groupBy(series_col).applyInPandas(report_group, schema=schema)

@@ -44,8 +44,11 @@ def streaming_disaggregate(
 
     Sink layout: parquet partitioned by ``batch_id`` so readers can take
     the latest solve per series (``row_number() over (partition by series
-    order by batch_id desc)``) — an upsert emulation that stays append-only
-    at the file layer (object stores cannot rewrite in place).
+    order by batch_id desc)``) — an upsert emulation that never rewrites
+    another batch's files (object stores cannot rewrite in place).  Each
+    batch overwrites only its own ``batch_id=N`` directory (dynamic
+    partition overwrite), so a micro-batch that ``foreachBatch`` replays
+    after a failure replaces its first attempt instead of duplicating it.
     """
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -60,7 +63,9 @@ def streaming_disaggregate(
         out = disaggregate(batch_df, ind_b, series_col=series_col, **disagg_kwargs)
         (
             out.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id")
             .parquet(sink_path)
         )
 
